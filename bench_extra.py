@@ -49,7 +49,7 @@ def stage_probes(spark):
     from pdfspark.engine import (
         extract_flat, generate_payloads, load_documents, synth_spans_df,
     )
-    from pdfspark.scale import salt_spans_by_size
+    from pdfspark.scale import salt_docs_by_size
 
     out = {}
     docs = load_documents(spark, SF_DIR)
@@ -57,7 +57,7 @@ def stage_probes(spark):
     out["scan_noop"] = timeit(spark, "scan_noop", lambda: noop(docs))
     spans = synth_spans_df(docs)
     out["synth_noop"] = timeit(spark, "synth", lambda: noop(spans))
-    salted = salt_spans_by_size(spans)
+    salted = salt_docs_by_size(spans)
     out["synth_salt_noop"] = timeit(spark, "synth+salt", lambda: noop(salted))
 
     # Python boundary floor: ship the salted spans through a
@@ -71,11 +71,11 @@ def stage_probes(spark):
     pt = salted.mapInPandas(passthrough, schema="n long")
     out["salt_boundary_noop"] = timeit(spark, "boundary", lambda: noop(pt))
 
-    gen = generate_payloads(salt_spans_by_size(synth_spans_df(docs)),
+    gen = generate_payloads(salt_docs_by_size(synth_spans_df(docs)),
                             "mixed", ensure=False)
     out["gen_noop"] = timeit(spark, "gen", lambda: noop(gen))
     full = extract_flat(
-        generate_payloads(salt_spans_by_size(synth_spans_df(docs)),
+        generate_payloads(salt_docs_by_size(synth_spans_df(docs)),
                           "mixed", ensure=False))
     out["gen_extract_noop"] = timeit(spark, "gen+extract", lambda: noop(full))
     out["gen_extract_count"] = timeit(spark, "gen+extract cnt",

@@ -5,12 +5,17 @@ Dataflow (all vectorized — the ONLY Python surfaces are mapInPandas
 stages over Arrow batches; no row-wise udf() anywhere, per input_hint):
 
     documents(doc_id, text, ...)                      [driver parquet]
-      → synth_spans_df      pure Spark SQL expressions (JVM, codegen)
-      → interleaved table (doc_id, spans[])           [input_hint shape]
-      → generate_payloads   mapInPandas → (doc_id, payload, size_class)
-      → salt_by_size        explicit skew repartition  (scale.py)
+      → salt_docs_by_size   explicit skew repartition of the (doc_id, text)
+                            rows — the one Exchange (scale.py)
+      → generate_payloads   mapInPandas → (doc_id, payload); spans are
+                            synthesized in-worker (codec.synth_spans_py)
       → extract             mapInPandas → (doc_id, status, error, spans[])
       → explode to rows for comparison / sinks
+
+generate_payloads and extract pipeline in one stage behind the salt.
+synth_spans_df builds the interleaved (doc_id, spans[]) input table
+[input_hint shape] in pure Spark SQL (JVM, codegen) for consumers of
+the span structs (spans_rows, the doc_spans SQL view).
 
 The per-document kernel state (xref maps, object caches) lives inside
 one mapInPandas batch pass per document and never crosses an executor
@@ -35,7 +40,7 @@ from .scale import salt_docs_by_size  # no cycle: scale's engine uses are lazy
 
 SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 SPANS_SCHEMA = f"array<{SPAN_STRUCT}>"
-PAYLOAD_SCHEMA = "doc_id bigint, payload binary, size_class int"
+PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
 EXTRACT_SCHEMA = f"doc_id bigint, status string, error string, spans {SPANS_SCHEMA}"
 ROWS_SCHEMA = "doc_id bigint, offset int, kind string, text string, media_ref string"
 
@@ -82,7 +87,7 @@ def synth_spans_df(docs: DataFrame) -> DataFrame:
 
     The source ``text`` column rides along (r9): spans are a pure
     function of text (lockstep-pinned against codec.synth_spans_py),
-    so downstream stages that only need text — salt_spans_by_size's
+    so downstream stages that only need text — salt_docs_by_size's
     closed-form size estimate, generate_payloads' in-worker synthesis —
     let Catalyst prune the struct array out of the plan entirely, while
     consumers of ``spans`` (spans_rows, the doc_spans SQL view) are
@@ -114,10 +119,6 @@ def spans_rows(spans_df: DataFrame) -> DataFrame:
 # Stage 2 — payload generation (mapInPandas; the reference's produce()
 # path S3 run as a vectorized batch stage)
 # ---------------------------------------------------------------------------
-
-
-def _spans_to_tuples(spans) -> list[tuple]:
-    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
 
 
 def _parse_byte_size(v: str) -> int:
@@ -174,78 +175,54 @@ def ensure_parallelism(df: DataFrame, factor: int = 3) -> DataFrame:
     formula (_estimated_scan_partitions) — NOT
     `df.rdd.getNumPartitions()`, which under AQE would materialize
     every upstream shuffle stage eagerly (the work then runs twice).
-    A frame with no input files (in-memory/derived) is assumed
-    under-partitioned and repartitioned; callers that already
-    repartitioned pass ensure=False."""
+    A frame with no input files (in-memory/derived) has no scan to
+    estimate and is returned unchanged."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * factor
     try:
         est = _estimated_scan_partitions(df)
     except Exception:
         est = 0
-    if est < target:
+    if 0 < est < target:
         return df.repartition(target, "doc_id")
     return df
 
 
 def generate_payloads(
-    spans_df: DataFrame, variant: str = "mixed", ensure: bool = True
+    docs_df: DataFrame, variant: str = "mixed", ensure: bool = True
 ) -> DataFrame:
-    """(doc_id, spans) or (doc_id, text) → (doc_id, payload, size_class).
+    """(doc_id, text) → (doc_id, payload).
 
-    Two accepted input shapes (r9, guide §4 — pass only the columns
-    the function needs):
-    - a TEXT frame carrying a ``text`` column (with or without a
-      derived ``spans`` column — synth_spans_df emits both): spans are
-      synthesized in-Python per document (codec.synth_spans_py — the
-      lockstep mirror of engine._SPANS_EXPR, so payload bytes are
-      identical), which skips the JVM struct synthesis and ships ~4×
-      fewer bytes through Arrow; a spans column present alongside text
-      is pruned out of the plan by Catalyst. NB this makes ``text``
-      authoritative: a frame whose spans were NOT derived from its
-      text by the canonical synthesis must drop the text column to
-      take the struct path.
-    - a spans-only frame (doc_id, spans[]): spans cross the Arrow
-      boundary as struct arrays and payloads build from the structs.
+    Spans are synthesized in-Python per document (codec.synth_spans_py
+    — the lockstep mirror of engine._SPANS_EXPR, so payload bytes equal
+    building from synth_spans_df's structs), which skips the JVM struct
+    synthesis and ships ~4× fewer bytes through Arrow (r9, guide §4 —
+    pass only the columns the function needs). Any other column, a
+    synth_spans_df ``spans`` column included, is pruned out of the plan
+    by Catalyst.
 
-    size_class = log4 bucket of payload length — the explicit skew
-    column consumed by scale.salt_by_size when salting post-generation
-    (the checkpointed sink path); the flagship pipeline salts BEFORE
-    this stage instead (scale.salt_spans_by_size /
-    scale.salt_docs_by_size)."""
-    # NB: ensure_parallelism inspects df.rdd, which under AQE
-    # materializes upstream shuffle stages eagerly (the work then runs
-    # twice). Callers that already repartitioned pass ensure=False.
-    from_text = "text" in spans_df.columns
-    if from_text:
-        spans_df = spans_df.select("doc_id", "text")
+    ``ensure=True`` applies the scan-parallelism floor
+    (ensure_parallelism); callers that salted first pass
+    ensure=False."""
+    docs_df = docs_df.select("doc_id", "text")
     if ensure:
-        spans_df = ensure_parallelism(spans_df)
+        docs_df = ensure_parallelism(docs_df)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .codec import synth_spans_py
 
         for pdf in batches:
             ids = pdf["doc_id"].tolist()
-            payloads = []
-            if from_text:
-                for did, text in zip(ids, pdf["text"]):
-                    v = variant_for(int(did), variant)
-                    payloads.append(
-                        build_pdf(str(did), synth_spans_py(str(did), text), v)
-                    )
-            else:
-                for did, spans in zip(ids, pdf["spans"]):
-                    v = variant_for(int(did), variant)
-                    payloads.append(
-                        build_pdf(str(did), _spans_to_tuples(spans), v)
-                    )
-            sizes = [max(len(p), 1).bit_length() // 2 for p in payloads]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": payloads, "size_class": sizes}
-            )
+            payloads = [
+                build_pdf(
+                    str(did), synth_spans_py(str(did), text),
+                    variant_for(int(did), variant),
+                )
+                for did, text in zip(ids, pdf["text"])
+            ]
+            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
-    return spans_df.mapInPandas(gen, schema=PAYLOAD_SCHEMA)
+    return docs_df.mapInPandas(gen, schema=PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -400,31 +377,21 @@ def roundtrip_rows(
     spark,
     sf_dir: str,
     variant: str = "mixed",
-    salt: bool = True,
     reading_order: bool = False,
     infer_spaces: bool = False,
 ) -> DataFrame:
-    """Flagship pipeline: synth → generate → (salt) → extract →
-    exploded span rows. Correct iff output == synth_spans rows (the
+    """Flagship pipeline: salt → generate → extract → exploded span
+    rows. Correct iff output == synth_spans rows (the
     round-trip identity; oracle = the same synthesis in DuckDB SQL).
 
     With ``variant='tagged', reading_order=True`` the identity is the
     READING-ORDER contract (r8): the generator paints marked-content
     sections in scrambled (two-column) order, so the identity holds
     only when extraction re-sequences by structure-tree traversal."""
-    from .scale import salt_docs_by_size
-
-    # r9: ship (doc_id, text) to the Python stages — spans synthesize
-    # in-worker (generate_payloads text path, byte-identical payloads)
-    # instead of materializing struct arrays JVM-side and Arrow-
-    # transferring them. Same single pre-generation salt Exchange,
-    # ~4× fewer shuffled/transferred bytes.
+    # skew-salt the (cheap) text rows BEFORE generation: one shuffle
+    # total; generate → extract then pipeline in one stage
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    if salt:
-        # skew-salt the (cheap) text rows BEFORE generation: one
-        # shuffle total; generate → extract then pipeline in one stage
-        docs = salt_docs_by_size(docs)
-    payloads = generate_payloads(docs, variant, ensure=not salt)
+    payloads = generate_payloads(salt_docs_by_size(docs), variant, ensure=False)
     return extract_flat(
         payloads, reading_order=reading_order, infer_spaces=infer_spaces
     )
@@ -527,8 +494,7 @@ def status_rows(spark, sf_dir: str, modulo: int = 17) -> DataFrame:
                 payloads.append(
                     build_pdf(str(did), synth_spans_py(str(did), text), v)
                 )
-            sizes = [max(len(p), 1).bit_length() // 2 for p in payloads]
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads, "size_class": sizes})
+            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
 
@@ -946,9 +912,7 @@ def catalog_fields_rows(spark, sf_dir: str) -> DataFrame:
                         },
                     )
                 )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": payloads, "size_class": [1] * len(ids)}
-            )
+            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
     meta = extract_metadata(payloads)
@@ -1042,10 +1006,7 @@ def page_labels_rows(spark, sf_dir: str) -> DataFrame:
                         },
                     )
                 )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": payloads,
-                 "size_class": [1] * len(ids)}
-            )
+            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
 

@@ -390,11 +390,9 @@ def run_streaming_extraction(
     extraction operator is literally the batch one — mapInPandas is
     streaming-compatible, so the 10^12-doc batch pipeline doubles as
     the incremental-ingest path."""
-    from ..engine import FLAT_SCHEMA, extract_flat
+    from ..engine import PAYLOAD_SCHEMA, extract_flat
 
-    payloads = spark.readStream.schema(
-        "doc_id bigint, payload binary, size_class int"
-    ).parquet(landing_dir)
+    payloads = spark.readStream.schema(PAYLOAD_SCHEMA).parquet(landing_dir)
     rows = extract_flat(payloads)
     q = (
         rows.writeStream.outputMode("append")
@@ -435,7 +433,7 @@ def run_streaming_extraction_to_table(
     import os
     import time
 
-    from ..engine import extract_flat
+    from ..engine import PAYLOAD_SCHEMA, extract_flat
     from ..scale import overwrite_partitions
 
     data_dir = os.path.join(out_dir, "spans")
@@ -444,7 +442,7 @@ def run_streaming_extraction_to_table(
     committed = {"n": 0}
 
     payloads = (
-        spark.readStream.schema("doc_id bigint, payload binary, size_class int")
+        spark.readStream.schema(PAYLOAD_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(landing_dir)
     )

@@ -4,10 +4,11 @@ resumable bucketed execution (SURVEY.md §4.2, north_rule).
 Three thin app-level pieces ride on built-in Spark (everything else is
 AQE + Arrow + Catalyst; no custom rules):
 
-1. ``salt_by_size`` — AQE skew handling does NOT cover UDF stages, so
-   large-PDF skew in the mapInPandas extract stage is handled with an
-   explicit (size_class, salt) repartition: a handful of 100 MB docs
-   must not serialize one task (SURVEY §4.2(a)).
+1. ``salt_docs_by_size`` — AQE skew handling does NOT cover UDF
+   stages, so large-PDF skew in the mapInPandas generate + extract
+   stage is handled with an explicit (size_class, salt) repartition of
+   the (doc_id, text) rows ahead of it: a handful of 100 MB docs must
+   not serialize one task (SURVEY §4.2(a)).
 2. ``lineage`` table — per-bucket checkpoint/metrics rows
    (FIXTURES.md §5): (bucket, status, doc_count, bytes_in, spans_out,
    wall_ms, attempt).
@@ -79,21 +80,35 @@ def overwrite_partitions(
 # ---------------------------------------------------------------------------
 
 
-def salt_spans_by_size(
-    spans_df: DataFrame,
-    num_partitions: Optional[int] = None,
-    salt_buckets: int = 4096,
-) -> DataFrame:
-    """Skew-salt BEFORE the expensive UDF stages, using the spans
-    array itself as the size proxy (payload bytes are linear in total
-    span text). Shuffling here moves the small spans rows — not the
-    generated payload bytes — and both generation and extraction then
-    run pipelined in ONE stage with no further exchange (measured
-    2.3× faster than salting the payload stream between them).
+# salt cardinality must be >> partition count: with only a handful of
+# distinct (size_class, salt) keys, hash partitioning goes Poisson-lumpy
+# and single partitions straggle
+SALT_BUCKETS = 4096
 
-    size_class = log4 bucket of the total text length; salt spreads
-    same-class docs. At 1000 executors this is the only shuffle in the
-    whole extraction pipeline.
+
+def salt_docs_by_size(
+    docs_df: DataFrame, num_partitions: Optional[int] = None
+) -> DataFrame:
+    """Skew-salt (doc_id, text) rows BEFORE the expensive UDF stages.
+    Shuffling here moves the small text rows — not the generated
+    payload bytes — and generation and extraction then run pipelined
+    in ONE stage with no further exchange (measured 2.3× faster than
+    salting the payload stream between them). At 1000 executors this
+    is the only shuffle in the whole extraction pipeline.
+
+    size_class = log4 bucket of the per-doc size estimate; salt
+    spreads same-class docs. The span synthesis is deterministic in
+    ``text`` (engine._SPANS_EXPR == codec.synth_spans_py), so the
+    estimate is computed CLOSED-FORM from the text length instead of
+    materializing the spans array first:
+
+        k       = ceil(len/CHUNK)            text chunks
+        n_media = k div 3                    media spans (i%3==2)
+        est     = len + 64·k + (32+64)·n_media
+
+    which is exactly aggregate(spans, acc + coalesce(length(text),32)
+    + 64) over the synthesized spans (pinned by
+    test_generate_payloads_text_path_matches_local_build).
 
     Partition count: data-driven at scale (≈ input_bytes / 128 MB,
     which at 100 TB is tens of thousands of partitions ≫ cores, so
@@ -101,51 +116,6 @@ def salt_spans_by_size(
     to ≈ one task per core, which measurement confirms is fastest —
     size_class co-location keeps waves homogeneous, so extra waves
     only add scheduling overhead."""
-    sc = spans_df.sparkSession.sparkContext
-    n = num_partitions or max(sc.defaultParallelism, 8)
-    if "text" in spans_df.columns:
-        # r9: synth_spans_df keeps the source text column, and the
-        # spans aggregate below is a closed form of the text length
-        # (see salt_docs_by_size — same k/est identity, pinned by the
-        # synthesis-lockstep tests). Computing est from text lets
-        # Catalyst prune the struct synthesis out of plans whose
-        # downstream consumers (generate_payloads text path) never
-        # read `spans`; size_class/salt and hence the partitioning are
-        # IDENTICAL either way.
-        k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
-        est = F.expr(f"length(text) + 64L * {k} + 96L * ({k} DIV 3)")
-    else:
-        est = F.expr(
-            "aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 32L) + 64L)"
-        )
-    salted = spans_df.withColumn(
-        "size_class",
-        F.floor(F.log2(F.greatest(est, F.lit(2))) / 2).cast("int"),
-    ).withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
-    return salted.repartition(n, "size_class", "salt").drop("salt", "size_class")
-
-
-def salt_docs_by_size(
-    docs_df: DataFrame,
-    num_partitions: Optional[int] = None,
-    salt_buckets: int = 4096,
-) -> DataFrame:
-    """Text-frame twin of :func:`salt_spans_by_size` (r9, guide §4:
-    ship only the columns the Python stage needs). The span synthesis
-    is deterministic in ``text`` (engine._SPANS_EXPR ==
-    codec.synth_spans_py), so the per-doc size estimate — and with it
-    size_class, salt, and the resulting partitioning — is computed
-    CLOSED-FORM from the text length instead of materializing the
-    spans array first:
-
-        k       = ceil(len/CHUNK)            text chunks
-        n_media = k div 3                    media spans (i%3==2)
-        est     = len + 64·k + (32+64)·n_media
-
-    which is exactly aggregate(spans, acc + coalesce(length(text),32)
-    + 64) over the synthesized spans. Same shuffle, ~4× fewer bytes
-    (no struct array), and the generate stage synthesizes spans
-    in-Python from the text it already holds."""
     sc = docs_df.sparkSession.sparkContext
     n = num_partitions or max(sc.defaultParallelism, 8)
     k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
@@ -153,33 +123,13 @@ def salt_docs_by_size(
     salted = docs_df.withColumn(
         "size_class",
         F.floor(F.log2(F.greatest(est, F.lit(2))) / 2).cast("int"),
-    ).withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
+    ).withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(SALT_BUCKETS)))
     return salted.repartition(n, "size_class", "salt").drop("salt", "size_class")
 
 
-def salt_by_size(
-    payloads: DataFrame,
-    num_partitions: Optional[int] = None,
-    salt_buckets: int = 4096,
-) -> DataFrame:
-    """Repartition the payload stream on (size_class, salt) ahead of
-    the extract UDF stage.
-
-    size_class is a log4 size bucket computed at generation time;
-    hashing (size_class, salt) spreads same-class docs evenly, so a skewed
-    tail of huge documents fans out across tasks instead of landing in
-    one. At 1000 executors, num_partitions ≈ 2-3× total cores; locally
-    AQE re-coalesces small outputs afterwards.
-    """
-    sc = payloads.sparkSession.sparkContext
-    n = num_partitions or max(sc.defaultParallelism * 3, 8)
-    # salt cardinality must be ≫ partition count: with only a handful
-    # of distinct (size_class, salt) keys, hash partitioning goes
-    # Poisson-lumpy and single partitions straggle
-    salted = payloads.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-    )
-    return salted.repartition(n, "size_class", "salt").drop("salt")
+# bench.py imports this name; it salts synth_spans_df output, which
+# carries ``text``
+salt_spans_by_size = salt_docs_by_size
 
 
 # ---------------------------------------------------------------------------
@@ -259,10 +209,7 @@ def run_checkpointed(
     data-written/lineage-pending window to exercise exactly that
     non-atomic gap.
     """
-    from .engine import (
-        extract, generate_payloads, load_documents, replicate_docs,
-        synth_spans_df,
-    )
+    from .engine import extract, generate_payloads, load_documents, replicate_docs
 
     lineage_dir = os.path.join(out_dir, "lineage")
     data_dir = os.path.join(out_dir, "spans")
@@ -320,6 +267,7 @@ def run_checkpointed(
         attempts = {b: attempts.get(b, 0) + 1 for b in pending} | {
             b: a for b, a in attempts.items() if b not in pending
         }
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     processed = 0
     for i in range(0, len(pending), buckets_per_commit):
         group = pending[i : i + buckets_per_commit]
@@ -329,16 +277,13 @@ def run_checkpointed(
             # deterministic in-plan corpus scale-up (scaling/stress
             # runs at the deployment surface — no data files written)
             docs = replicate_docs(docs, replicate)
-        docs = docs.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+        docs = docs.select("doc_id", "text").where(
+            bucket.isin([int(b) for b in group])
         )
-        docs = docs.where(F.col("bucket").isin([int(b) for b in group]))
-        spans = synth_spans_df(docs.drop("bucket"))
-        payloads = generate_payloads(spans, variant)
-        payloads = salt_by_size(payloads)
-        extracted = extract(payloads).withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
+        # the flagship shape: salt the text rows, then generate and
+        # extract pipelined in one stage behind that single Exchange
+        payloads = generate_payloads(salt_docs_by_size(docs), variant, ensure=False)
+        extracted = extract(payloads).withColumn("bucket", bucket)
         if null_sink:
             # compute-only twin: the SAME per-group plan (corpus scan,
             # bucket filter, salt, generate, extract) discarded through

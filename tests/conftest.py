@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -15,6 +17,14 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def ref_bytes(name: str) -> bytes:
     with open(os.path.join(REF, name), "rb") as f:
         return f.read()
+
+
+def formatted_plan(df) -> str:
+    """``df.explain("formatted")`` as text (no action runs)."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 @pytest.fixture(scope="session")

@@ -5,8 +5,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, formatted_plan
 from pdfspark.codec import synth_spans_py
 from pdfspark.engine import (
     extract,
@@ -58,14 +59,16 @@ def test_roundtrip_rows_matches_synthesis(spark):
     assert {(r.doc_id, r.offset, r.kind, r.text, r.media_ref) for r in rows} == expected
 
 
-def test_generate_payloads_struct_and_text_paths_identical(spark):
-    """r9: generate_payloads prefers the text path when a text column
-    is present (synth_spans_df keeps text alongside spans). Pin that
-    (a) the struct path — a spans-only frame — still works and builds
-    byte-identical payloads, and (b) salt_spans_by_size's closed-form
-    text size estimate equals the spans aggregate for every doc."""
+def test_generate_payloads_text_path_matches_local_build(spark):
+    """generate_payloads synthesizes spans in-worker from ``text``.
+    Pin that (a) its payloads are byte-equal to build_pdf over the
+    synth_spans_df structs, built locally, and (b)
+    salt_spans_by_size's closed-form text size estimate equals the
+    spans aggregate for every doc, so salting from text is the same
+    salt."""
     import pyspark.sql.functions as F
 
+    from pdfspark.codec import build_pdf, variant_for
     from pdfspark.scale import salt_spans_by_size
 
     docs = load_documents(spark, SF_SMOKE).limit(40)
@@ -74,13 +77,15 @@ def test_generate_payloads_struct_and_text_paths_identical(spark):
         r.doc_id: bytes(r.payload)
         for r in generate_payloads(both, "mixed", ensure=False).collect()
     }
-    via_struct = {
-        r.doc_id: bytes(r.payload)
-        for r in generate_payloads(
-            both.drop("text"), "mixed", ensure=False
-        ).collect()
+    built = {
+        r.doc_id: build_pdf(
+            str(r.doc_id),
+            [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],
+            variant_for(r.doc_id, "mixed"),
+        )
+        for r in both.collect()
     }
-    assert via_text == via_struct and via_text
+    assert via_text == built and via_text
 
     k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
     est_text = F.expr(f"length(text) + 64L * {k} + 96L * ({k} DIV 3)")
@@ -91,9 +96,26 @@ def test_generate_payloads_struct_and_text_paths_identical(spark):
         est_text.alias("a"), est_spans.alias("b")
     ).where("a <> b").count()
     assert diff == 0
-    # and the exported salt wrapper accepts both shapes
+    # the alias bench.py imports keeps synth_spans_df's columns
     assert salt_spans_by_size(both).columns == ["doc_id", "text", "spans"]
-    assert salt_spans_by_size(both.drop("text")).columns == ["doc_id", "spans"]
+    # generation reads text: a spans-only frame fails at plan time
+    with pytest.raises(AnalysisException):
+        generate_payloads(both.drop("text"))
+
+
+def test_ensure_parallelism_leaves_derived_frame_alone(spark):
+    """Only an under-split FILE scan is repartitioned; a frame with no
+    input files has nothing to estimate and keeps its plan."""
+    from pdfspark.engine import ensure_parallelism
+
+    def exchanges(df):
+        return formatted_plan(df).count("Exchange")
+
+    derived = spark.createDataFrame(
+        [(i, "t") for i in range(10)], "doc_id long, text string"
+    )
+    assert exchanges(ensure_parallelism(derived)) == 0
+    assert exchanges(ensure_parallelism(load_documents(spark, SF_SMOKE))) > 0
 
 
 def test_malformed_policy(spark):

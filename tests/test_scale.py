@@ -5,19 +5,19 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
 
-from conftest import SF_SMOKE
-from pdfspark.engine import generate_payloads, load_documents, synth_spans_df
-from pdfspark.scale import completed_buckets, run_checkpointed, salt_by_size
+from conftest import SF_SMOKE, formatted_plan
+from pdfspark.engine import generate_payloads, load_documents
+from pdfspark.scale import completed_buckets, run_checkpointed, salt_docs_by_size
 
 
-def test_salt_by_size_spreads_partitions(spark):
+def test_salt_docs_by_size_spreads_partitions(spark):
     docs = load_documents(spark, SF_SMOKE).limit(64)
-    payloads = generate_payloads(synth_spans_df(docs), "classic")
-    salted = salt_by_size(payloads, num_partitions=8)
+    salted = salt_docs_by_size(docs, num_partitions=8)
     assert salted.rdd.getNumPartitions() == 8
     sizes = (
         salted.withColumn("pid", F.spark_partition_id())
@@ -86,10 +86,11 @@ def test_crash_between_data_write_and_lineage_commit(spark, tmp_path):
 
 def test_skew_large_docs_spread_across_partitions(spark, tmp_path):
     """skew_large family (FIXTURES §3): 0.1%-style oversized docs must
-    not concentrate: after salt_by_size, no partition should carry more
-    than ~2 of the 8 planted giants (they differ in salt, so they
+    not concentrate: after salt_docs_by_size, no partition should carry
+    more than ~2 of the 8 planted giants (they differ in salt, so they
     spread), and the byte-heaviest partition must hold well under the
-    giants' combined weight."""
+    giants' combined weight. Generation is narrow, so the payloads
+    stay in the partitions the salt chose."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(40)
     giants = (
         docs.limit(8)
@@ -97,10 +98,10 @@ def test_skew_large_docs_spread_across_partitions(spark, tmp_path):
         .withColumn("text", F.expr("repeat(text, 120)"))  # ~100-200× spans
     )
     both = docs.unionByName(giants)
-    payloads = generate_payloads(synth_spans_df(both), "classic")
-    salted = salt_by_size(payloads, num_partitions=8)
+    salted = salt_docs_by_size(both, num_partitions=8)
+    payloads = generate_payloads(salted, "classic", ensure=False)
     per_part = (
-        salted.withColumn("pid", F.spark_partition_id())
+        payloads.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .agg(
             F.sum(F.length("payload")).alias("bytes"),
@@ -112,6 +113,36 @@ def test_skew_large_docs_spread_across_partitions(spark, tmp_path):
     assert max(r.giants for r in per_part) <= 3  # salted spread
     total = sum(r.bytes for r in per_part)
     assert max(r.bytes for r in per_part) < 0.55 * total
+
+
+def test_checkpointed_plan_salts_text_once(spark, tmp_path, monkeypatch):
+    """The deployment path runs the flagship shape: a bucket group's
+    plan has exactly one Exchange — the (size_class, salt) repartition
+    of the (doc_id, text) rows ahead of generation — so neither
+    payload bytes nor span structs cross a shuffle."""
+    import pdfspark.scale as scale
+
+    plans = []
+    orig = scale.overwrite_partitions
+
+    def capture(df, *a, **kw):
+        plans.append(formatted_plan(df))
+        return orig(df, *a, **kw)
+
+    monkeypatch.setattr(scale, "overwrite_partitions", capture)
+    run_checkpointed(
+        spark, SF_SMOKE, str(tmp_path / "plan"), n_buckets=2, buckets_per_commit=2
+    )
+    assert len(plans) == 1
+    exchanges = re.findall(
+        r"^\(\d+\) Exchange\s*\nInput \[\d+\]: \[(.*)\]\nArguments: (.*)$",
+        plans[0],
+        re.M,
+    )
+    assert len(exchanges) == 1, plans[0]
+    cols, args = exchanges[0]
+    assert re.match(r"hashpartitioning\(size_class#\d+, salt#\d+L, \d+\)", args), args
+    assert "payload" not in cols and "spans" not in cols, cols
 
 
 def test_iceberg_dispatch_mocked(spark, monkeypatch):

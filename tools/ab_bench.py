@@ -52,14 +52,14 @@ def _worker(run_in: str, names: list[str], sf_dir: str, out_path: str) -> None:
                     extract_flat, generate_payloads, load_documents,
                     replicate_docs, synth_spans_df,
                 )
-                from pdfspark.scale import salt_spans_by_size
+                from pdfspark.scale import salt_docs_by_size
             except ImportError:
                 continue  # surface absent in this tree
             k = int(os.environ.get("BENCH_AB_REPLICATE", "48"))
             docs = replicate_docs(load_documents(spark, sf_dir), k)
             rows = extract_flat(
                 generate_payloads(
-                    salt_spans_by_size(synth_spans_df(docs)), "mixed",
+                    salt_docs_by_size(synth_spans_df(docs)), "mixed",
                     ensure=False,
                 )
             )

@@ -24,7 +24,7 @@ sys.path.insert(0, {repo!r})
 from pdfspark.session import get_spark
 from pdfspark.engine import (extract_flat, generate_payloads, load_documents,
                              replicate_docs, synth_spans_df)
-from pdfspark.scale import salt_spans_by_size
+from pdfspark.scale import salt_docs_by_size
 
 cpus = int(os.environ["CPUS"])
 sf_dir = os.environ["SF_DIR"]
@@ -32,7 +32,7 @@ K = int(os.environ.get("REPLICATE", "16"))
 
 def pipeline(sdir, k):
     docs = replicate_docs(load_documents(spark, sdir), k)
-    spans = salt_spans_by_size(synth_spans_df(docs))
+    spans = salt_docs_by_size(synth_spans_df(docs))
     return extract_flat(generate_payloads(spans, "mixed", ensure=False))
 spark = get_spark(master=f"local[{{cpus}}]", shuffle_partitions=cpus * 2,
                   app_name=f"scaling-{{cpus}}")

@@ -5,7 +5,7 @@ size-class salt.
 The failure mode at 100 TB: large documents arrive clustered (crawls
 group by site; dumps sort by size), so input splits inherit the skew
 and AQE cannot rebalance a UDF stage. The salt is the fix this engine
-carries (scale.salt_spans_by_size). This tool plants clustered giants
+carries (scale.salt_docs_by_size). This tool plants clustered giants
 (~500× the span count) CLUSTERED at the head of the input order and
 measures both paths. Appends the result to BENCH/BASELINE.md.
 
@@ -38,11 +38,11 @@ def build_skewed_docs(spark, sf_dir: str):
 def run(spark, docs, salted: bool) -> float:
     from pdfspark.engine import extract_flat, generate_payloads
     from pdfspark.engine import synth_spans_df
-    from pdfspark.scale import salt_spans_by_size
+    from pdfspark.scale import salt_docs_by_size
 
     spans = synth_spans_df(docs)
     if salted:
-        spans = salt_spans_by_size(spans, num_partitions=32)
+        spans = salt_docs_by_size(spans, num_partitions=32)
         payloads = generate_payloads(spans, "classic", ensure=False)
     else:
         payloads = generate_payloads(spans, "classic", ensure=False)
@@ -69,7 +69,7 @@ def main() -> None:
 Corpus: `{sf_dir}` ({n} docs) + 20 giants (500× span count) CLUSTERED
 at the head of the input order — the size-sorted-dump failure mode.
 Identical pipeline, with vs without the explicit size-class salt
-(`scale.salt_spans_by_size`; AQE cannot rebalance UDF stages):
+(`scale.salt_docs_by_size`; AQE cannot rebalance UDF stages):
 
 | path | wall (s) |
 |---|---|
