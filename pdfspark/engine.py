@@ -20,18 +20,34 @@ the span structs (spans_rows, the doc_spans SQL view).
 The per-document kernel state (xref maps, object caches) lives inside
 one mapInPandas batch pass per document and never crosses an executor
 boundary (SURVEY §1.3, §3 'boundaries').
+
+``map_rows`` is the one Python stage shape: every per-document stage
+here and in ops/html.py and ops/multimodal.py is a module-level
+per-row function (callable on the driver) run by it. The Arrow-boundary
+work — column selection, the batch loop, the columnar assembly named
+from the DDL schema — is written once there; the row functions hold
+only the per-document work. Faults are the row function's business:
+stages that parse a document go through kernel.extract.run_guarded
+(the one per-document fault policy), so ``extract`` keeps an error row
+and the flat/geometry/navigation stages emit no rows for a failed
+document; html and media stages raise.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
-from typing import Iterator, Optional, Sequence
+from functools import partial
+from typing import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType
 
-from .codec import build_pdf, variant_for
+from .codec import SPANS_PER_PAGE, build_pdf, synth_spans_py, variant_for
+from .kernel import ParserSettings, extract_meta, extract_spans, extract_spans_geo
+from .kernel.cos import CDict, CString, Name
 from .scale import salt_docs_by_size  # no cycle: scale's engine uses are lazy
 
 # ---------------------------------------------------------------------------
@@ -45,6 +61,45 @@ EXTRACT_SCHEMA = f"doc_id bigint, status string, error string, spans {SPANS_SCHE
 ROWS_SCHEMA = "doc_id bigint, offset int, kind string, text string, media_ref string"
 
 CHUNK = 80  # must match codec.synth_spans_py and the oracle SQL
+
+# ---------------------------------------------------------------------------
+# The stage runner — the one mapInPandas loop
+# ---------------------------------------------------------------------------
+
+
+def map_rows(
+    df: DataFrame,
+    in_cols: Sequence[str],
+    fn: Callable[..., Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """One Python stage over ``df``'s ``in_cols``: ``fn(*values)`` runs
+    once per input row and returns that row's output tuples (zero or
+    more) in ``schema`` order. Each Arrow batch's columns are built
+    with one transpose of its rows and named from the DDL ``schema``;
+    an empty batch yields an empty frame with the schema's columns.
+    Catches nothing — the fault policy belongs to ``fn``."""
+    in_cols = list(in_cols)
+    out_type = DataType.fromDDL(schema)
+    names = out_type.names
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for vals in zip(*(pdf[c].tolist() for c in in_cols))
+                for out in fn(*vals)
+            ]
+            # from_records transposes in C; with no rows its columns
+            # are object-typed, so nested schema types still convert
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    # every plan step is a driver-side analysis (~10 ms): parse the
+    # schema once, and add no Project when df already is in_cols
+    if df.columns != in_cols:
+        df = df.select(*in_cols)
+    return df.mapInPandas(stage, schema=out_type)
+
 
 # ---------------------------------------------------------------------------
 # Stage 1 — spans synthesis (pure Spark SQL; mirrors codec.synth_spans_py
@@ -207,22 +262,15 @@ def generate_payloads(
     docs_df = docs_df.select("doc_id", "text")
     if ensure:
         docs_df = ensure_parallelism(docs_df)
+    return map_rows(
+        docs_df, ("doc_id", "text"), partial(_payload_row, variant=variant),
+        PAYLOAD_SCHEMA,
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import synth_spans_py
 
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = [
-                build_pdf(
-                    str(did), synth_spans_py(str(did), text),
-                    variant_for(int(did), variant),
-                )
-                for did, text in zip(ids, pdf["text"])
-            ]
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return docs_df.mapInPandas(gen, schema=PAYLOAD_SCHEMA)
+def _payload_row(did, text, variant: str):
+    spans = synth_spans_py(str(did), text)
+    return [(did, build_pdf(str(did), spans, variant_for(int(did), variant)))]
 
 
 # ---------------------------------------------------------------------------
@@ -236,32 +284,17 @@ def extract(payloads: DataFrame) -> DataFrame:
 
     PERMISSIVE per-document fault policy (§2.8): malformed payloads
     yield status='error' and never spans, never a failed stage."""
+    return map_rows(payloads, ("doc_id", "payload"), _spans_row, EXTRACT_SCHEMA)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans  # import inside worker
 
-        for pdf in batches:
-            out_status, out_err, out_spans = [], [], []
-            for payload in pdf["payload"]:
-                status, err, spans = extract_spans(bytes(payload))
-                out_status.append(status)
-                out_err.append(err)
-                out_spans.append(
-                    [
-                        {"kind": k, "text": t, "media_ref": m, "offset": o}
-                        for (k, t, m, o) in spans
-                    ]
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "status": out_status,
-                    "error": out_err,
-                    "spans": out_spans,
-                }
-            )
-
-    return payloads.mapInPandas(ker, schema=EXTRACT_SCHEMA)
+def _spans_row(key, payload):
+    """(key, status, error, spans[]) — always exactly one row, so a
+    failed document stays visible as its error row."""
+    status, err, spans = extract_spans(bytes(payload))
+    return [(
+        key, status, err,
+        [{"kind": k, "text": t, "media_ref": m, "offset": o} for (k, t, m, o) in spans],
+    )]
 
 
 FLAT_SCHEMA = "doc_id bigint, offset int, kind string, text string, media_ref string"
@@ -288,39 +321,24 @@ def extract_flat(
     order) instead of content paint order; untagged docs unchanged.
     ``infer_spaces=True`` (r8) turns on §9.10-adjacent word-boundary
     inference (spaces from positioning-only glyph gaps)."""
+    fn = partial(
+        _flat_rows, lenient=lenient, reading_order=reading_order,
+        infer_spaces=infer_spaces,
+    )
+    return map_rows(payloads, ("doc_id", "payload"), fn, FLAT_SCHEMA)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans
-        from .kernel.errors import ParserSettings
 
-        settings = ParserSettings(allow_reconstruction=True) if lenient else None
-
-        for pdf in batches:
-            ids, offs, kinds, texts, refs = [], [], [], [], []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                status, _err, spans = extract_spans(
-                    bytes(payload), settings, reading_order=reading_order,
-                    infer_spaces=infer_spaces,
-                )
-                if status != "ok":
-                    continue
-                for (k, t, m, o) in spans:
-                    ids.append(did)
-                    offs.append(o)
-                    kinds.append(k)
-                    texts.append(t)
-                    refs.append(m)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "offset": offs,
-                    "kind": kinds,
-                    "text": texts,
-                    "media_ref": refs,
-                }
-            )
-
-    return payloads.mapInPandas(ker, schema=FLAT_SCHEMA)
+def _flat_rows(
+    did, payload, lenient: bool = False, reading_order: bool = False,
+    infer_spaces: bool = False,
+):
+    """One row per span; a failed document yields no rows."""
+    settings = ParserSettings(allow_reconstruction=True) if lenient else None
+    _status, _err, spans = extract_spans(
+        bytes(payload), settings, reading_order=reading_order,
+        infer_spaces=infer_spaces,
+    )
+    return [(did, o, k, t, m) for (k, t, m, o) in spans]
 
 
 META_SCHEMA = (
@@ -331,37 +349,21 @@ META_SCHEMA = (
     "encrypted boolean, creation_ts timestamp"
 )
 
-_META_COLS = [
-    "title", "author", "subject", "keywords", "creator", "producer",
-    "creation_date", "mod_date", "trapped", "version", "lang", "page_mode",
-    "page_layout", "page_count", "encrypted", "creation_ts",
-]
+# the kernel's metadata keys: META_SCHEMA's columns after the status triple
+_META_COLS = [f.split()[0] for f in META_SCHEMA.split(",")][3:]
 
 
 def extract_metadata(payloads: DataFrame) -> DataFrame:
     """Metadata-only kernel (M3/M7/M9/M10) — split from extract() so
     metadata queries never decode content streams (the lazy-page
     optimization, SURVEY §4.1)."""
+    return map_rows(payloads, ("doc_id", "payload"), _meta_row, META_SCHEMA)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_meta
 
-        names = ("doc_id", "status", "error", *_META_COLS)
-        for pdf in batches:
-            # columnar assembly (r9): pd.DataFrame from per-column
-            # lists skips the per-row dict → per-cell inference path
-            data = {c: [] for c in names}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                status, err, meta = extract_meta(bytes(payload))
-                meta = meta or {}
-                data["doc_id"].append(did)
-                data["status"].append(status)
-                data["error"].append(err)
-                for c in _META_COLS:
-                    data[c].append(meta.get(c))
-            yield pd.DataFrame(data)
-
-    return payloads.mapInPandas(ker, schema=META_SCHEMA)
+def _meta_row(did, payload):
+    status, err, meta = extract_meta(bytes(payload))
+    meta = meta or {}
+    return [(did, status, err, *(meta.get(c) for c in _META_COLS))]
 
 
 # ---------------------------------------------------------------------------
@@ -409,34 +411,14 @@ def extract_geometry(payloads: DataFrame, tj_kerning: bool = False) -> DataFrame
     box where derivable (media: CTM scale; text: h = font size).
     Same single-UDF-stage shape as extract_flat. ``tj_kerning=True``
     counts TJ kern displacements toward span width (§9.4.3)."""
+    fn = partial(_geo_rows, tj_kerning=tj_kerning)
+    return map_rows(payloads, ("doc_id", "payload"), fn, GEO_SCHEMA)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans_geo
 
-        for pdf in batches:
-            ids, offs, kinds, xs, ys, ws, hs = [], [], [], [], [], [], []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                status, _err, spans = extract_spans_geo(
-                    bytes(payload), tj_kerning=tj_kerning
-                )
-                if status != "ok":
-                    continue
-                for (k, _t, _m, o, x, y, w, h) in spans:
-                    ids.append(did)
-                    offs.append(o)
-                    kinds.append(k)
-                    xs.append(x)
-                    ys.append(y)
-                    ws.append(w)
-                    hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids, "offset": offs, "kind": kinds,
-                    "x": xs, "y": ys, "w": ws, "h": hs,
-                }
-            )
-
-    return payloads.mapInPandas(ker, schema=GEO_SCHEMA)
+def _geo_rows(did, payload, tj_kerning: bool = False):
+    """One row per span; a failed document yields no rows."""
+    _status, _err, spans = extract_spans_geo(bytes(payload), tj_kerning=tj_kerning)
+    return [(did, o, k, x, y, w, h) for (k, _t, _m, o, x, y, w, h) in spans]
 
 
 def salvage_rows(spark, sf_dir: str, encrypted: bool = False) -> DataFrame:
@@ -447,8 +429,6 @@ def salvage_rows(spark, sf_dir: str, encrypted: bool = False) -> DataFrame:
     ``encrypted=True`` (driver query `pdf_salvage_encrypted`) breaks
     cipher- and layout-rotated ENCRYPTED docs instead: reconstruction
     must harvest /Encrypt, unlock, then expand the object streams."""
-    from .scale import salt_docs_by_size
-
     variant = (
         "malformed:no_startxref_encrypted"
         if encrypted
@@ -465,8 +445,6 @@ def geometry_rows(
     """Span-geometry pipeline: the roundtrip path with the
     geometry-widened extractor (driver query `pdf_span_geometry`;
     `pdf_span_geometry_kerned` passes tj_kerning=True)."""
-    from .scale import salt_docs_by_size
-
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), variant, ensure=False)
     return extract_geometry(payloads, tj_kerning=tj_kerning)
@@ -477,46 +455,34 @@ def status_rows(spark, sf_dir: str, modulo: int = 17) -> DataFrame:
     malformed payload (kind rotates) — those must land status='error'
     with zero spans (FileHandlingTest contract §5.2)."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import synth_spans_py
-
-        kinds = ("noise", "only_header", "header_eof", "zerosized", "no_startxref")
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for did, text in zip(ids, pdf["text"]):
-                did = int(did)
-                if did % modulo == 0:
-                    v = f"malformed:{kinds[(did // modulo) % len(kinds)]}"
-                else:
-                    v = variant_for(did, "mixed")
-                payloads.append(
-                    build_pdf(str(did), synth_spans_py(str(did), text), v)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
-
+    payloads = map_rows(
+        salt_docs_by_size(docs), ("doc_id", "text"),
+        partial(_status_payload_row, modulo=modulo), PAYLOAD_SCHEMA,
+    )
     # r9: the query only needs (status, span COUNT) — emit them
     # directly from the kernel stage instead of shipping every span as
     # an Arrow struct array through Python→JVM just to size() it
     # (guide §4: pass/return only what the consumer needs).
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans
-
-        for pdf in batches:
-            ids, sts, ns = [], [], []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                status, _err, spans = extract_spans(bytes(payload))
-                ids.append(did)
-                sts.append(status)
-                ns.append(len(spans))
-            yield pd.DataFrame({"doc_id": ids, "status": sts, "n_spans": ns})
-
-    return payloads.mapInPandas(
-        ker, schema="doc_id bigint, status string, n_spans int"
+    return map_rows(
+        payloads, ("doc_id", "payload"), _status_row,
+        "doc_id bigint, status string, n_spans int",
     )
+
+
+_MALFORMED_KINDS = ("noise", "only_header", "header_eof", "zerosized", "no_startxref")
+
+
+def _status_payload_row(did, text, modulo: int):
+    if did % modulo == 0:
+        v = f"malformed:{_MALFORMED_KINDS[(did // modulo) % len(_MALFORMED_KINDS)]}"
+    else:
+        v = variant_for(did, "mixed")
+    return [(did, build_pdf(str(did), synth_spans_py(str(did), text), v))]
+
+
+def _status_row(did, payload):
+    status, _err, spans = extract_spans(bytes(payload))
+    return [(did, status, len(spans))]
 
 
 def metadata_rows(spark, sf_dir: str) -> DataFrame:
@@ -546,27 +512,24 @@ def attachments_rows(spark, sf_dir: str) -> DataFrame:
     (name, filename, size, md5) — all recomputable in SQL."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), "attachments", ensure=False)
+    return map_rows(payloads, ("doc_id", "payload"), _attachment_rows, ATT_SCHEMA)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    doc = parse_document(bytes(payload))
-                    for r in doc.embedded_files():
-                        rows.append({"doc_id": did, **r})
-                except Exception:
-                    continue  # PERMISSIVE per-doc policy (§2.8)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "att_name", "filename", "size", "content_md5",
-                ],
-            )
+def _doc_items(payload, method: str) -> list:
+    """``Document.<method>()`` of one payload under the per-document
+    fault policy (kernel.extract.run_guarded): a document that fails
+    to parse has no items."""
+    from .kernel.extract import parse_document, run_guarded
 
-    return payloads.mapInPandas(ker, schema=ATT_SCHEMA)
+    _status, _err, items = run_guarded(
+        lambda: getattr(parse_document(bytes(payload)), method)(), []
+    )
+    return items
+
+
+def _attachment_rows(did, payload):
+    # embedded_files' dicts are keyed in ATT_SCHEMA order
+    return [(did, *r.values()) for r in _doc_items(payload, "embedded_files")]
 
 
 def outlines_rows(spark, sf_dir: str) -> DataFrame:
@@ -576,32 +539,14 @@ def outlines_rows(spark, sf_dir: str) -> DataFrame:
     emits (pos, level, title) in display order — closed-form SQL."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), "navigation", ensure=False)
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for (pos, level, title) in parse_document(
-                        bytes(payload)
-                    ).outlines():
-                        rows.append(
-                            {
-                                "doc_id": did, "pos": pos,
-                                "level": level, "title": title,
-                            }
-                        )
-                except Exception:
-                    continue  # PERMISSIVE per-doc policy (§2.8)
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "pos", "level", "title"]
-            )
-
-    return payloads.mapInPandas(
-        ker, schema="doc_id bigint, pos int, level int, title string"
+    return map_rows(
+        payloads, ("doc_id", "payload"), _outline_rows,
+        "doc_id bigint, pos int, level int, title string",
     )
+
+
+def _outline_rows(did, payload):
+    return [(did, *item) for item in _doc_items(payload, "outlines")]
 
 
 REFERENCE_PDF_DIR = "/root/reference/pdfparse-lib/src/test/resources"
@@ -627,57 +572,31 @@ def reference_golden_rows(spark, sf_dir: str) -> DataFrame:
     pins of this engine's text-op layer (the reference has none).
     ``sf_dir`` is unused (the inputs are the fixed real files) but
     kept for the driver's (spark, sf_dir) calling contract."""
-    import os
-
     paths = [os.path.join(REFERENCE_PDF_DIR, f) for f in REFERENCE_PDFS]
     payloads = spark.read.format("binaryFile").load(paths)
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import os as _os
-
-        from .kernel import extract_meta_doc, extract_spans
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                try:  # §2.8 per-file fault policy for the meta pass
-                    meta = extract_meta_doc(data)
-                except Exception:
-                    meta = {
-                        "title": "", "author": "", "page_count": 0,
-                        "page_mode": "",
-                    }
-                status, _err, spans = extract_spans(data)
-                h = hashlib.md5()
-                for (k, t, m, o) in spans:
-                    h.update(f"{k}|{t or ''}|{m or ''}|{o}\x1e".encode())
-                rows.append(
-                    {
-                        "fname": _os.path.basename(path),
-                        "title": meta["title"],
-                        "author": meta["author"],
-                        "page_count": meta["page_count"],
-                        "page_mode": meta["page_mode"],
-                        "status": status,
-                        "n_spans": len(spans),
-                        "spans_md5": h.hexdigest()[:16],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "fname", "title", "author", "page_count", "page_mode",
-                    "status", "n_spans", "spans_md5",
-                ],
-            )
-
-    return payloads.mapInPandas(
-        ker,
-        schema="fname string, title string, author string, page_count int,"
+    return map_rows(
+        payloads, ("path", "content"), _golden_row,
+        "fname string, title string, author string, page_count int,"
         " page_mode string, status string, n_spans bigint, spans_md5 string",
     )
+
+
+_NO_META = {"title": "", "author": "", "page_count": 0, "page_mode": ""}
+
+
+def _golden_row(path, content):
+    data = bytes(content)
+    _st, _err, meta = extract_meta(data)
+    meta = meta or _NO_META
+    status, _err, spans = extract_spans(data)
+    h = hashlib.md5()
+    for (k, t, m, o) in spans:
+        h.update(f"{k}|{t or ''}|{m or ''}|{o}\x1e".encode())
+    return [(
+        os.path.basename(path), meta["title"], meta["author"],
+        meta["page_count"], meta["page_mode"], status, len(spans),
+        h.hexdigest()[:16],
+    )]
 
 
 MALFORMED_PDF_DIR = os.path.join(REFERENCE_PDF_DIR, "malformed_pdfs")
@@ -708,32 +627,9 @@ def reference_malformed_rows(spark, sf_dir: str) -> DataFrame:
     payloads = spark.read.format("binaryFile").load(
         os.path.join(MALFORMED_PDF_DIR, "*.pdf")
     )
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os as _os
-
-        from .kernel import extract_spans
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                status, err, spans = extract_spans(bytes(content))
-                rows.append(
-                    {
-                        "fname": _os.path.basename(path),
-                        "status": status,
-                        "err_class": (err or "").split(":")[0],
-                        "n_spans": len(spans),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["fname", "status", "err_class", "n_spans"]
-            )
-
-    got = payloads.mapInPandas(
-        ker,
-        schema="fname string, status string, err_class string,"
-        " n_spans bigint",
+    got = map_rows(
+        payloads, ("path", "content"), _malformed_row,
+        "fname string, status string, err_class string, n_spans bigint",
     )
     expected = spark.createDataFrame(
         [(f,) for f in MALFORMED_PDFS], "fname string"
@@ -748,6 +644,11 @@ def reference_malformed_rows(spark, sf_dir: str) -> DataFrame:
         )
     )
     return got.unionByName(dropped)
+
+
+def _malformed_row(path, content):
+    status, err, spans = extract_spans(bytes(content))
+    return [(os.path.basename(path), status, (err or "").split(":")[0], len(spans))]
 
 
 def mutation_rows(spark, sf_dir: str) -> DataFrame:
@@ -774,39 +675,26 @@ def mutation_rows(spark, sf_dir: str) -> DataFrame:
         "fname string, kind string, seed int, status string,"
         " err_class string, n_spans bigint"
     )
-    cols = ["fname", "kind", "seed", "status", "err_class", "n_spans"]
     paths = [os.path.join(REFERENCE_PDF_DIR, f) for f in REFERENCE_PDFS]
     payloads = spark.read.format("binaryFile").load(paths)
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os as _os
-
-        from .fuzz import mutant_rows_for
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(
-                    mutant_rows_for(_os.path.basename(path), bytes(content))
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    def gen_ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .fuzz import generator_seed_payload, mutant_rows_for
-
-        for pdf in batches:
-            rows = []
-            for v in pdf["variant"]:
-                fname, payload = generator_seed_payload(v)
-                rows.extend(mutant_rows_for(fname, payload))
-            yield pd.DataFrame(rows, columns=cols)
-
     gen_seeds = spark.createDataFrame(
         [(v,) for v in GEN_FUZZ_VARIANTS], "variant string"
     ).repartition(len(GEN_FUZZ_VARIANTS))
-    return payloads.mapInPandas(ker, schema=schema).unionByName(
-        gen_seeds.mapInPandas(gen_ker, schema=schema)
+    return map_rows(payloads, ("path", "content"), _mutant_rows, schema).unionByName(
+        map_rows(gen_seeds, ("variant",), _generator_mutant_rows, schema)
     )
+
+
+def _mutant_rows(path, content):
+    from .fuzz import mutant_rows_for
+
+    return mutant_rows_for(os.path.basename(path), bytes(content))
+
+
+def _generator_mutant_rows(variant):
+    from .fuzz import generator_seed_payload, mutant_rows_for
+
+    return mutant_rows_for(*generator_seed_payload(variant))
 
 
 def form_fields_rows(spark, sf_dir: str) -> DataFrame:
@@ -818,34 +706,14 @@ def form_fields_rows(spark, sf_dir: str) -> DataFrame:
     ftype, value) per terminal field, all closed-form in doc_id."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), "acroform", ensure=False)
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for (pos, name, ftype, value) in parse_document(
-                        bytes(payload)
-                    ).form_fields():
-                        rows.append(
-                            {
-                                "doc_id": did, "pos": pos, "name": name,
-                                "ftype": ftype, "value": value,
-                            }
-                        )
-                except Exception:
-                    continue  # PERMISSIVE per-doc policy (§2.8)
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "pos", "name", "ftype", "value"]
-            )
-
-    return payloads.mapInPandas(
-        ker,
-        schema="doc_id bigint, pos int, name string, ftype string,"
-        " value string",
+    return map_rows(
+        payloads, ("doc_id", "payload"), _form_field_rows,
+        "doc_id bigint, pos int, name string, ftype string, value string",
     )
+
+
+def _form_field_rows(did, payload):
+    return [(did, *item) for item in _doc_items(payload, "form_fields")]
 
 
 def links_rows(spark, sf_dir: str) -> DataFrame:
@@ -855,27 +723,14 @@ def links_rows(spark, sf_dir: str) -> DataFrame:
     web-scale pipeline extracts alongside text."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), "navigation", ensure=False)
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for (page_idx, uri) in parse_document(
-                        bytes(payload)
-                    ).link_uris():
-                        rows.append(
-                            {"doc_id": did, "page_idx": page_idx, "uri": uri}
-                        )
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["doc_id", "page_idx", "uri"])
-
-    return payloads.mapInPandas(
-        ker, schema="doc_id bigint, page_idx int, uri string"
+    return map_rows(
+        payloads, ("doc_id", "payload"), _link_rows,
+        "doc_id bigint, page_idx int, uri string",
     )
+
+
+def _link_rows(did, payload):
+    return [(did, *item) for item in _doc_items(payload, "link_uris")]
 
 
 PAGE_MODES_ROTATION = (
@@ -888,35 +743,21 @@ def catalog_fields_rows(spark, sf_dir: str) -> DataFrame:
     documents.lang column) and /PageMode (rotating by doc_id); the
     metadata kernel reads them back. Oracle: the source columns."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text", "lang")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import build_pdf, synth_spans_py
-        from .kernel.cos import CString, Name
-
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for did, text, lang in zip(ids, pdf["text"], pdf["lang"]):
-                did = int(did)
-                spans = synth_spans_py(str(did), text)
-                payloads.append(
-                    build_pdf(
-                        str(did),
-                        spans,
-                        "classic",
-                        catalog_extra={
-                            "Lang": CString.from_text(lang),
-                            "PageMode": Name(
-                                PAGE_MODES_ROTATION[did % len(PAGE_MODES_ROTATION)]
-                            ),
-                        },
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
+    payloads = map_rows(
+        salt_docs_by_size(docs), ("doc_id", "text", "lang"),
+        _catalog_payload_row, PAYLOAD_SCHEMA,
+    )
     meta = extract_metadata(payloads)
     return meta.select("doc_id", "lang", "page_mode")
+
+
+def _catalog_payload_row(did, text, lang):
+    catalog = {
+        "Lang": CString.from_text(lang),
+        "PageMode": Name(PAGE_MODES_ROTATION[did % len(PAGE_MODES_ROTATION)]),
+    }
+    spans = synth_spans_py(str(did), text)
+    return [(did, build_pdf(str(did), spans, "classic", catalog_extra=catalog))]
 
 
 PAGE_LABEL_STYLES = ("D", "R", "r", "A", "a")
@@ -931,8 +772,6 @@ def _page_label_ranges(did: int, n_pages: int) -> list:
     style by doc_id (/St omitted when it would be the default 1);
     docs with >= 3 pages open a second prefixed range at page 2 —
     prefix-only (no /S) when doc_id % 7 == 0."""
-    from .kernel.cos import CDict, CString, Name
-
     r1 = CDict()
     r1[Name("S")] = Name(PAGE_LABEL_STYLES[did % 5])
     st1 = did % 3 + 1
@@ -954,8 +793,6 @@ def page_label_tree(did: int, n_pages: int):
     two ranges exercises the /Kids + /Limits shape (§7.9.7); the kids
     stay direct dicts (legal — deref handles both). Everything else
     gets a flat /Nums leaf."""
-    from .kernel.cos import CDict, Name
-
     ranges = _page_label_ranges(did, n_pages)
     root = CDict()
     if did % 4 == 0 and len(ranges) == 2:
@@ -985,53 +822,25 @@ def page_labels_rows(spark, sf_dir: str) -> DataFrame:
     the reference reads no number trees (its catalog surface is
     PDFDocCatalog.java's mode/layout/lang trio)."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import SPANS_PER_PAGE, build_pdf, synth_spans_py
-
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for did, text in zip(ids, pdf["text"]):
-                did = int(did)
-                spans = synth_spans_py(str(did), str(text) * PL_REP)
-                n_pages = max(1, -(-len(spans) // SPANS_PER_PAGE))
-                payloads.append(
-                    build_pdf(
-                        str(did),
-                        spans,
-                        "classic",
-                        catalog_extra={
-                            "PageLabels": page_label_tree(did, n_pages)
-                        },
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for idx, lab in enumerate(
-                        parse_document(bytes(payload)).page_labels()
-                    ):
-                        rows.append(
-                            {"doc_id": did, "page_idx": idx, "label": lab}
-                        )
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["doc_id", "page_idx", "label"])
-
-    return payloads.mapInPandas(
-        ker, schema="doc_id bigint, page_idx int, label string"
+    payloads = map_rows(
+        salt_docs_by_size(docs), ("doc_id", "text"), _page_label_payload_row,
+        PAYLOAD_SCHEMA,
+    )
+    return map_rows(
+        payloads, ("doc_id", "payload"), _page_label_rows,
+        "doc_id bigint, page_idx int, label string",
     )
 
 
+def _page_label_payload_row(did, text):
+    spans = synth_spans_py(str(did), str(text) * PL_REP)
+    n_pages = max(1, -(-len(spans) // SPANS_PER_PAGE))
+    catalog = {"PageLabels": page_label_tree(did, n_pages)}
+    return [(did, build_pdf(str(did), spans, "classic", catalog_extra=catalog))]
+
+
+def _page_label_rows(did, payload):
+    return [(did, idx, lab) for idx, lab in enumerate(_doc_items(payload, "page_labels"))]
 
 def date_rows(spark, sf_dir: str) -> DataFrame:
     """C5 oracle query: the kernel parses the generator's
@@ -1064,29 +873,8 @@ def extract_pdf_files(spark, path_glob: str) -> DataFrame:
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")
         .load(path_glob)
-        .select(F.col("path"), F.col("content").alias("payload"))
     )
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans
-
-        for pdf in batches:
-            rows = []
-            for path, payload in zip(pdf["path"], pdf["payload"]):
-                status, err, spans = extract_spans(bytes(payload))
-                rows.append(
-                    {
-                        "path": path,
-                        "status": status,
-                        "error": err,
-                        "spans": [
-                            {"kind": k, "text": t, "media_ref": m, "offset": o}
-                            for (k, t, m, o) in spans
-                        ],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(
-        ker, schema=f"path string, status string, error string, spans {SPANS_SCHEMA}"
+    return map_rows(
+        files, ("path", "content"), _spans_row,
+        f"path string, status string, error string, spans {SPANS_SCHEMA}",
     )

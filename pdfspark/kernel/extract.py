@@ -9,7 +9,9 @@ PDFDocCatalog.java:59-67 / SURVEY §4.1).
 
 Both are PERMISSIVE: any hard failure (EParseError, RecursionError,
 ValueError...) becomes status='error' for that document only — the
-§2.8 fault-policy mapping. The malformed-file contract
+§2.8 fault-policy mapping, written once in ``run_guarded``; every
+wrapper here and every engine stage that parses a document goes
+through it. The malformed-file contract
 (FileHandlingTest.java:32-56: noise / header-only / header+EOF /
 zero-length must never produce spans) holds: those payloads fail the
 entry-point resolve (X1) and land in the error bucket.
@@ -17,7 +19,7 @@ entry-point resolve (X1) and land in the error bucket.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional, TypeVar
 
 from .docmodel import Document
 from .errors import EParseError, ParserSettings
@@ -26,6 +28,8 @@ from .textops import Span, interpret_content
 from .xref import Parser
 
 SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
+
+T = TypeVar("T")
 
 
 def parse_document(payload: bytes, settings: Optional[ParserSettings] = None) -> Document:
@@ -136,6 +140,17 @@ def extract_spans_doc(
     return out
 
 
+def run_guarded(call: Callable[[], T], default: T) -> tuple[str, Optional[str], T]:
+    """The one per-document fault policy (§2.8): run one kernel call
+    → ("ok", None, result); ANY exception becomes ("error",
+    "<Class>: <message>", default) for that document only, never a
+    failed stage."""
+    try:
+        return ("ok", None, call())
+    except Exception as e:  # per-document fault policy (§2.8)
+        return ("error", f"{type(e).__name__}: {e}", default)
+
+
 def extract_spans(
     payload: bytes,
     settings: Optional[ParserSettings] = None,
@@ -143,17 +158,13 @@ def extract_spans(
     infer_spaces: bool = False,
 ) -> tuple[str, Optional[str], list[tuple]]:
     """PERMISSIVE wrapper → (status, error, spans)."""
-    try:
-        return (
-            "ok",
-            None,
-            extract_spans_doc(
-                payload, settings, reading_order=reading_order,
-                infer_spaces=infer_spaces,
-            ),
-        )
-    except Exception as e:  # per-row fault policy (§2.8)
-        return ("error", f"{type(e).__name__}: {e}", [])
+    return run_guarded(
+        lambda: extract_spans_doc(
+            payload, settings, reading_order=reading_order,
+            infer_spaces=infer_spaces,
+        ),
+        [],
+    )
 
 
 def extract_spans_fuzz(
@@ -170,16 +181,13 @@ def extract_spans_fuzz(
     Mirrors the reference's must-not-crash contract
     (FileHandlingTest.java:45-55) under seeded mutations of its own
     sample corpus — the web-crawl failure modes."""
-    from .errors import EParseError, ParserSettings  # noqa: F401
-
     settings = ParserSettings(allow_reconstruction=True)
-    try:
-        doc_spans = extract_spans_doc(payload, settings, _want_doc=True)
-        doc, spans = doc_spans
-        status = "salvaged" if doc.parser.salvaged else "ok"
-        return (status, "", spans)
-    except Exception as e:
-        return ("error", type(e).__name__, [])
+    status, err, (doc, spans) = run_guarded(
+        lambda: extract_spans_doc(payload, settings, _want_doc=True), (None, [])
+    )
+    if err is not None:
+        return (status, err.partition(":")[0], spans)
+    return ("salvaged" if doc.parser.salvaged else "ok", "", spans)
 
 
 def extract_spans_geo(
@@ -191,16 +199,12 @@ def extract_spans_geo(
     ``tj_kerning=True`` counts TJ kern displacements toward span
     width (§9.4.3 tx = (−t/1000·Tfs)·Th; off by default — the
     documented simple-extraction width semantics)."""
-    try:
-        return (
-            "ok",
-            None,
-            extract_spans_doc(
-                payload, settings, geometry=True, tj_kerning=tj_kerning
-            ),
-        )
-    except Exception as e:
-        return ("error", f"{type(e).__name__}: {e}", [])
+    return run_guarded(
+        lambda: extract_spans_doc(
+            payload, settings, geometry=True, tj_kerning=tj_kerning
+        ),
+        [],
+    )
 
 
 def extract_meta_doc(payload: bytes, settings: Optional[ParserSettings] = None) -> dict:
@@ -230,7 +234,4 @@ def extract_meta_doc(payload: bytes, settings: Optional[ParserSettings] = None) 
 def extract_meta(
     payload: bytes, settings: Optional[ParserSettings] = None
 ) -> tuple[str, Optional[str], Optional[dict]]:
-    try:
-        return ("ok", None, extract_meta_doc(payload, settings))
-    except Exception as e:
-        return ("error", f"{type(e).__name__}: {e}", None)
+    return run_guarded(lambda: extract_meta_doc(payload, settings), None)

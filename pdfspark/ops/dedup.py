@@ -223,7 +223,14 @@ def minhash_pairs_df(
     the shingles of CANDIDATE docs only — the candidate id set is
     broadcast and the big shingle table is semi-join-filtered before
     any shuffle (§3.2's pre-filter move; candidate ids are bounded by
-    Σ_buckets cap², orders of magnitude below the corpus)."""
+    Σ_buckets cap², orders of magnitude below the corpus).
+
+    ``verify_docs``, when given, must hold the SAME (doc_id, text)
+    rows as ``docs``, only partitioned differently (e.g. the raw scan
+    behind a repartitioned ``docs``). The verify pass re-shingles
+    candidates from it through inner joins, so a candidate missing
+    from ``verify_docs`` silently drops its pairs, and different text
+    gives wrong Jaccard counts."""
     # one Exchange on (band, band_val): bucket membership, cap, and
     # i<j pair expansion all inside the aggregation's partitioning.
     # Shingles are NOT persisted (r9): the signature pass streams them

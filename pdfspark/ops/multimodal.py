@@ -32,11 +32,18 @@ media_ref → the whole pipeline has a DuckDB oracle via md5() SQL.
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from ..codec import (
+    _media_avi_bytes, _media_bmp_bytes, _media_gif_bytes,
+    _media_jpeg_420_bytes, _media_jpeg_bytes, _media_jpeg_dri_bytes,
+    _media_jpeg_progressive_bytes, _media_png_bytes, _media_stub_bytes,
+    _media_tiff_bytes, _media_wav_bytes,
+)
+from ..engine import load_documents, map_rows
 
 MEDIA_BYTES_SCHEMA = "doc_id bigint, media_ref string, payload binary"
 MEDIA_META_SCHEMA = (
@@ -518,19 +525,18 @@ class _JpegBitReader:
 
     def restart(self, expect: int) -> None:
         """Consume one RSTn marker at a restart boundary (T.81
-        F.2.1.3.1, r8): discard the partial byte's pad bits, skip any
-        pad bytes (incl. a stuffed FF 00 the 1-fill can produce) up to
-        the marker, verify the modulo-8 sequence number, and resume
-        bit reading after it.  Out-of-sequence or missing markers
-        raise — the caller falls back to header dims, never emits
-        silently-wrong pixels."""
+        F.2.1.3.1, r8): discard the partial byte's pad bits (that byte,
+        stuffed FF 00 included, was already read), skip the 0xFF fill
+        bytes a marker may carry before it (B.1.1.2), verify the
+        modulo-8 sequence number, and resume bit reading after it.
+        Any other byte before the marker, a missing marker or an
+        out-of-sequence one raises — the caller falls back to header
+        dims, never emits silently-wrong pixels."""
         self.n = 0
         buf, p = self.buf, self.pos
-        while p + 1 < len(buf) and not (
-            buf[p] == 0xFF and buf[p + 1] != 0x00
-        ):
+        while p + 1 < len(buf) and buf[p] == 0xFF and buf[p + 1] == 0xFF:
             p += 1
-        if p + 1 >= len(buf) or not (0xD0 <= buf[p + 1] <= 0xD7):
+        if not (p + 1 < len(buf) and buf[p] == 0xFF and 0xD0 <= buf[p + 1] <= 0xD7):
             raise NotImplementedError("missing JPEG restart marker")
         if (buf[p + 1] & 7) != (expect & 7):
             raise NotImplementedError("JPEG restart marker out of sequence")
@@ -655,12 +661,13 @@ def _jpeg_decode(payload: bytes) -> dict:
                  ri_state)
             )
             # skip entropy-coded data to the next true marker (RSTn
-            # markers live INSIDE the entropy data — skip past them)
+            # markers live INSIDE the entropy data — skip past them,
+            # and past the 0xFF fill bytes a marker may carry, B.1.1.2)
             j = data_off
             while j + 1 < len(payload):
                 if (
                     payload[j] == 0xFF
-                    and payload[j + 1] != 0x00
+                    and payload[j + 1] not in (0x00, 0xFF)
                     and not 0xD0 <= payload[j + 1] <= 0xD7
                 ):
                     break
@@ -1036,8 +1043,6 @@ def media_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     with media_ref = 'm' + md5(doc_id || ':' || i)[:16] — so
     sequence(2, k-1, 3) enumerates exactly those i. Identical rows,
     no struct array, no kind filter."""
-    from ..engine import load_documents
-
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     k = "CAST(ceil(length(text) / 80.0) AS INT)"
     refs = (
@@ -1054,43 +1059,33 @@ def media_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def attach_media_bytes(media: DataFrame) -> DataFrame:
     """media_ref → opaque binary payload (the generator's DCT stub),
     Arrow-batched."""
+    return map_rows(
+        media, ("doc_id", "media_ref"), _media_bytes_row, MEDIA_BYTES_SCHEMA
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec import _media_stub_bytes
 
-        for pdf in batches:
-            yield pdf.assign(
-                payload=[_media_stub_bytes(m) for m in pdf["media_ref"]]
-            )
-
-    return media.mapInPandas(gen, schema=MEDIA_BYTES_SCHEMA)
+def _media_bytes_row(did, mref):
+    return [(did, mref, _media_stub_bytes(mref))]
 
 
 def decode_media(with_bytes: DataFrame) -> DataFrame:
     """Vectorized decode + resize stage: one Arrow batch of binary
     payloads in, typed metadata out. thumb = fit into 64×64 (integer
     math, oracle-exact)."""
+    return map_rows(
+        with_bytes, ("doc_id", "media_ref", "payload"), _decode_media_row,
+        MEDIA_META_SCHEMA,
+    )
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, mref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                m = _fake_decode(bytes(payload))
-                scale_den = max(m["width"], m["height"])
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "media_ref": mref,
-                        **m,
-                        "thumb_w": max(1, m["width"] * 64 // scale_den),
-                        "thumb_h": max(1, m["height"] * 64 // scale_den),
-                    }
-                )
-            yield pd.DataFrame(rows)
 
-    return with_bytes.mapInPandas(ker, schema=MEDIA_META_SCHEMA)
+def _decode_media_row(did, mref, payload):
+    m = _fake_decode(bytes(payload))
+    w, h = m["width"], m["height"]
+    den = max(w, h)
+    return [(
+        did, mref, m["fmt"], w, h, m["n_bytes"],
+        max(1, w * 64 // den), max(1, h * 64 // den),
+    )]
 
 
 def media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1154,30 +1149,20 @@ def sample_frames(with_bytes: DataFrame) -> DataFrame:
     derives from its digest (1 + hex[9:12] % 48); emit every
     FRAME_STEP-th frame with a deterministic tag (stub for the real
     frame grab — ffmpeg on a production cluster)."""
+    return map_rows(
+        with_bytes, ("doc_id", "media_ref", "payload"), _frame_rows, FRAMES_SCHEMA
+    )
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
 
-        for pdf in batches:
-            ids, refs, idxs, tags = [], [], [], []
-            for did, mref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                p = bytes(payload)
-                # frame count from container bytes [8:10) — which are
-                # digest bytes, so the SQL oracle can re-derive them
-                # from md5(media_ref) (DuckDB's md5 has no BLOB form)
-                n_frames = 1 + int.from_bytes(p[8:10], "big") % 48
-                for fi in range(0, n_frames, FRAME_STEP):
-                    ids.append(did)
-                    refs.append(mref)
-                    idxs.append(fi)
-                    tags.append(hashlib.md5(f"{mref}:{fi}".encode()).hexdigest()[:8])
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_ref": refs, "frame_idx": idxs, "frame_tag": tags}
-            )
-
-    return with_bytes.mapInPandas(ker, schema=FRAMES_SCHEMA)
+def _frame_rows(did, mref, payload):
+    # frame count from container bytes [8:10) — which are digest
+    # bytes, so the SQL oracle can re-derive them from md5(media_ref)
+    # (DuckDB's md5 has no BLOB form)
+    n_frames = 1 + int.from_bytes(bytes(payload)[8:10], "big") % 48
+    return [
+        (did, mref, fi, hashlib.md5(f"{mref}:{fi}".encode()).hexdigest()[:8])
+        for fi in range(0, n_frames, FRAME_STEP)
+    ]
 
 
 def media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1207,47 +1192,28 @@ def media_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     format, dims and channel means from md5(media_ref); for JPEG the
     means are the YCbCr fixed-point roundtrip of the color (the one
     lossy step — mirrored integer-exactly in SQL)."""
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from ..codec import (
-            _media_bmp_bytes, _media_gif_bytes, _media_jpeg_420_bytes,
-            _media_jpeg_bytes, _media_jpeg_dri_bytes,
-            _media_jpeg_progressive_bytes, _media_png_bytes,
-            _media_tiff_bytes,
-        )
-
-        makers = (
-            _media_bmp_bytes, _media_png_bytes, _media_gif_bytes,
-            _media_tiff_bytes, _media_jpeg_bytes,
-            _media_jpeg_progressive_bytes, _media_jpeg_420_bytes,
-            _media_jpeg_dri_bytes,
-        )
-        for pdf in batches:
-            rows = []
-            for did, mref in zip(pdf["doc_id"], pdf["media_ref"]):
-                maker = makers[hashlib.md5(mref.encode()).digest()[5] % 8]
-                m = decode_image_real(maker(mref))
-                rows.append(
-                    {
-                        "doc_id": did, "media_ref": mref, "fmt": m["fmt"],
-                        "width": m["width"], "height": m["height"],
-                        "mean_r": m["mean_r"], "mean_g": m["mean_g"],
-                        "mean_b": m["mean_b"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "fmt", "width", "height",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return media_spans(spark, sf_dir).mapInPandas(
-        ker, schema=MEDIA_DECODE_SCHEMA
+    return map_rows(
+        media_spans(spark, sf_dir), ("doc_id", "media_ref"), _decode_real_row,
+        MEDIA_DECODE_SCHEMA,
     )
+
+
+# media_decode_real's format rotation, picked by md5(media_ref) byte 5
+_IMAGE_MAKERS = (
+    _media_bmp_bytes, _media_png_bytes, _media_gif_bytes,
+    _media_tiff_bytes, _media_jpeg_bytes,
+    _media_jpeg_progressive_bytes, _media_jpeg_420_bytes,
+    _media_jpeg_dri_bytes,
+)
+
+
+def _decode_real_row(did, mref):
+    maker = _IMAGE_MAKERS[hashlib.md5(mref.encode()).digest()[5] % len(_IMAGE_MAKERS)]
+    m = decode_image_real(maker(mref))
+    return [(
+        did, mref, m["fmt"], m["width"], m["height"],
+        m["mean_r"], m["mean_g"], m["mean_b"],
+    )]
 
 
 MEDIA_VIDEO_SCHEMA = (
@@ -1266,34 +1232,18 @@ def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-derives geometry, frame count, codec and the per-frame
     shifted color (MJPEG: its YCbCr fixed-point roundtrip) from
     md5(media_ref)."""
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec import _media_avi_bytes
-
-        for pdf in batches:
-            rows = []
-            for did, mref in zip(pdf["doc_id"], pdf["media_ref"]):
-                m = decode_image_real(_media_avi_bytes(mref))
-                for (fi, mr, mg, mb) in m["frames"]:
-                    rows.append(
-                        {
-                            "doc_id": did, "media_ref": mref,
-                            "codec": m["codec"], "frame_idx": fi,
-                            "width": m["width"], "height": m["height"],
-                            "mean_r": mr, "mean_g": mg, "mean_b": mb,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "codec", "frame_idx",
-                    "width", "height", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return media_spans(spark, sf_dir).mapInPandas(
-        ker, schema=MEDIA_VIDEO_SCHEMA
+    return map_rows(
+        media_spans(spark, sf_dir), ("doc_id", "media_ref"), _video_frame_rows,
+        MEDIA_VIDEO_SCHEMA,
     )
+
+
+def _video_frame_rows(did, mref):
+    m = decode_image_real(_media_avi_bytes(mref))
+    return [
+        (did, mref, m["codec"], fi, m["width"], m["height"], mr, mg, mb)
+        for (fi, mr, mg, mb) in m["frames"]
+    ]
 
 
 def _media_video_sql() -> str:
@@ -1379,33 +1329,18 @@ def media_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic in media_ref) and runs through the real decoder
     (RIFF chunk walk + numpy sample statistics). Closed-form oracle
     over md5(media_ref)."""
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec import _media_wav_bytes
-
-        for pdf in batches:
-            rows = []
-            for did, mref in zip(pdf["doc_id"], pdf["media_ref"]):
-                m = decode_image_real(_media_wav_bytes(mref))
-                rows.append(
-                    {
-                        "doc_id": did, "media_ref": mref, "fmt": m["fmt"],
-                        "sample_rate": m["sample_rate"],
-                        "n_channels": m["n_channels"],
-                        "n_samples": m["n_samples"], "peak": m["peak"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "fmt", "sample_rate",
-                    "n_channels", "n_samples", "peak",
-                ],
-            )
-
-    return media_spans(spark, sf_dir).mapInPandas(
-        ker, schema=MEDIA_AUDIO_SCHEMA
+    return map_rows(
+        media_spans(spark, sf_dir), ("doc_id", "media_ref"), _audio_row,
+        MEDIA_AUDIO_SCHEMA,
     )
+
+
+def _audio_row(did, mref):
+    m = decode_image_real(_media_wav_bytes(mref))
+    return [(
+        did, mref, m["fmt"], m["sample_rate"], m["n_channels"],
+        m["n_samples"], m["peak"],
+    )]
 
 
 def _media_audio_sql() -> str:

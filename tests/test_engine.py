@@ -118,6 +118,79 @@ def test_ensure_parallelism_leaves_derived_frame_alone(spark):
     assert exchanges(ensure_parallelism(load_documents(spark, SF_SMOKE))) > 0
 
 
+def test_map_rows_emits_each_rows_tuples_under_schema_names(spark):
+    """The stage runner: fn's 0, 1 or 3 output tuples per input row
+    come back exactly, under the schema's column names, nested
+    struct arrays included; columns outside in_cols never reach fn."""
+    from pdfspark.engine import SPANS_SCHEMA, map_rows
+
+    def fn(k, n):
+        return [
+            (k, i, [{"kind": "text", "text": f"{k}-{i}", "media_ref": None, "offset": i}])
+            for i in range(n)
+        ]
+
+    src = spark.createDataFrame(
+        [(10, 0, "x"), (11, 1, "y"), (12, 3, "z")], "k bigint, n int, junk string"
+    ).repartition(2)
+    got = map_rows(src, ("k", "n"), fn, f"key bigint, i int, spans {SPANS_SCHEMA}")
+    assert got.columns == ["key", "i", "spans"]
+    rows = sorted((r.key, r.i, [tuple(s) for s in r.spans]) for r in got.collect())
+    assert rows == [
+        (11, 0, [("text", "11-0", None, 0)]),
+        (12, 0, [("text", "12-0", None, 0)]),
+        (12, 1, [("text", "12-1", None, 1)]),
+        (12, 2, [("text", "12-2", None, 2)]),
+    ]
+
+
+def test_map_rows_empty_batches_keep_schema(spark):
+    """No input rows, or no output rows from any input row: an empty
+    frame with the schema, not a stage failure."""
+    from pyspark.sql.types import DataType
+
+    from pdfspark.engine import EXTRACT_SCHEMA, map_rows
+
+    src = spark.createDataFrame([(1, b"a"), (2, b"b")], "doc_id bigint, payload binary")
+    for df, fn in (
+        (src.where(F.lit(False)), lambda did, p: [(did, "ok", None, [])]),
+        (src, lambda did, p: []),
+    ):
+        got = map_rows(df, ("doc_id", "payload"), fn, EXTRACT_SCHEMA)
+        assert got.collect() == []
+        assert got.schema == DataType.fromDDL(EXTRACT_SCHEMA)
+
+
+def test_planted_kernel_bug_follows_the_stage_policy(monkeypatch):
+    """A kernel bug (TypeError) under each stage's per-row function:
+    extract keeps an error row, the flat and navigation stages drop
+    the document, the fuzz wrapper reports the bare class name, and an
+    html stage raises."""
+    from pdfspark import engine
+    from pdfspark.kernel import extract as kx
+    from pdfspark.ops import html
+
+    text = "planted bug " * 20
+    [(_, classic)] = engine._payload_row(7, text, "classic")
+    [(_, nav)] = engine._payload_row(7, text, "navigation")
+    assert engine._flat_rows(7, classic) and engine._outline_rows(7, nav)
+
+    def boom(*_a, **_k):
+        raise TypeError("planted")
+
+    monkeypatch.setattr(kx, "parse_document", boom)
+    [(did, status, err, spans)] = engine._spans_row(7, classic)
+    assert (did, status, spans) == (7, "error", [])
+    assert err.startswith("TypeError")
+    assert engine._flat_rows(7, classic) == []
+    assert engine._outline_rows(7, nav) == []
+    assert kx.extract_spans_fuzz(classic) == ("error", "TypeError", [])
+
+    monkeypatch.setattr(html, "strip_boilerplate", boom)
+    with pytest.raises(TypeError):
+        html._main_text_row(7, text)
+
+
 def test_malformed_policy(spark):
     rows = status_rows(spark, SF_SMOKE).collect()
     assert rows

@@ -173,7 +173,7 @@ def _reference_corpus():
     for rel in REFERENCE_PDFS:
         path = os.path.join(REFERENCE_PDF_DIR, rel)
         if not os.path.exists(path):
-            continue
+            raise FileNotFoundError(f"reference fuzz seed missing: {path}")
         with open(path, "rb") as f:
             out.append((os.path.basename(rel), f.read()))
     return out

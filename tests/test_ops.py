@@ -686,6 +686,19 @@ def test_jpeg_restart_interval_decode_real():
     assert (m["width"], m["height"]) == (W, H)
     assert "mean_r" not in m  # header-dims fallback, no fake pixels
 
+    # junk between an interval's last MCU and its RSTn → fallback;
+    # 0xFF fill bytes there (T.81 B.1.1.2) → exact decode
+    clean = _jpeg_dri_bytes(W, H, color, ri=2)
+    k = clean.index(b"\xff\xd0", clean.index(b"\xff\xda"))
+    base = multimodal.decode_image_real(_jpeg_bytes(W, H, color))
+    base.pop("n_bytes")
+    m = multimodal.decode_image_real(clean[:k] + b"\x5a" + clean[k:])
+    assert (m["width"], m["height"]) == (W, H)
+    assert "mean_r" not in m
+    m = multimodal.decode_image_real(clean[:k] + b"\xff\xff" + clean[k:])
+    m.pop("n_bytes")
+    assert m == base
+
 
 def test_jpeg_progressive_decode_real():
     """r7: REAL progressive (SOF2) decode — DC successive
