@@ -58,7 +58,6 @@ SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 SPANS_SCHEMA = f"array<{SPAN_STRUCT}>"
 PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
 EXTRACT_SCHEMA = f"doc_id bigint, status string, error string, spans {SPANS_SCHEMA}"
-ROWS_SCHEMA = "doc_id bigint, offset int, kind string, text string, media_ref string"
 
 CHUNK = 80  # must match codec.synth_spans_py and the oracle SQL
 

@@ -214,16 +214,6 @@ class CDict(dict):
         v = self.get(key, COS_NULL)
         return v if isinstance(v, Ref) else None
 
-    def get_rect(self, key, default=None, resolver=None):
-        v = self._get(key, resolver)
-        if isinstance(v, list) and len(v) == 4 and all(
-            isinstance(x, (int, float)) and not isinstance(x, bool) for x in v
-        ):
-            from .docmodel import Rect
-
-            return Rect.normalized(*[float(x) for x in v])
-        return default
-
 
 class CStream:
     """Dictionary + raw `/Length` body bytes (cos/COSStream.java:31-39)."""
@@ -252,13 +242,6 @@ _NAME_RUN_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
 # cos/COSName.java:33,127-128); bounded to stay batch-safe
 _NAME_CACHE: dict = {}
 _NAME_CACHE_MAX = 4096
-_NUMBER_RE = re.compile(rb"[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)")
-# one-pass "ref or number" for the digit-led dispatch in parse_object
-_NUMREF_RE = re.compile(
-    rb"(?P<id>[0-9]{1,9})[\x00\t\n\x0c\r ]+(?P<gen>[0-9]{1,5})"
-    rb"[\x00\t\n\x0c\r ]+(?P<kw>R|obj)"
-    rb"|(?P<num>[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+))"
-)
 _IDGEN_RE = re.compile(rb"([0-9]+)[\x00\t\n\x0c\r ]+([0-9]+)[\x00\t\n\x0c\r ]+(R|obj)")
 _LITERAL_SPECIAL_RE = re.compile(rb"[\\()\r]")
 
@@ -295,27 +278,6 @@ def parse_name(r: Raw) -> Name:
             out.append(b)
             i += 1
     return Name(out.decode("latin-1"))
-
-
-def parse_number(r: Raw) -> Union[int, float]:
-    """T3 — int or fixed-point real; sign only leading; one '.'; no
-    exponent (cos/COSNumber.java:130-213; semantics pinned by
-    TestCOSNumber.java:152-274 — "-0000"→0, "+1234567890/"→int then
-    delimiter terminates, "-.002", "4.")."""
-    d, n = r.data, r.length
-    start = r.pos
-    m = _NUMBER_RE.match(d, start)
-    if m is None:
-        raise EParseError(f"malformed number at {start}")
-    p = m.end()
-    # terminator must be WS / delimiter / EOF (PDF has no exponent form)
-    if p < n and not (is_ws(d[p]) or is_delim(d[p])):
-        raise EParseError(f"malformed number at {start}: bad terminator {d[p]:#x}")
-    r.pos = p
-    text = m.group()
-    if b"." in text:
-        return float(text)
-    return int(text)
 
 
 def try_read_id(r: Raw) -> Optional[tuple[int, int, bytes]]:
@@ -544,29 +506,8 @@ def _stream_followup(
     return CStream(out, body)
 
 
-def parse_dict_or_stream(r: Raw, resolver: Optional[Resolver]) -> Union[CDict, CStream]:
-    """T6 + T8 — ``<<...>>`` dictionary (possibly a stream). Entry
-    validation then the shared scanner."""
-    if not r.data.startswith(b"<<", r.pos):
-        raise EParseError(f"dict expected at {r.pos}")
-    v = parse_object(r, resolver)
-    if not isinstance(v, (CDict, CStream)):  # unreachable by grammar
-        raise EParseError(f"dict expected at {r.pos}")
-    return v
-
-
-def parse_array(r: Raw, resolver: Optional[Resolver]) -> list:
-    """T7 — ``[...]`` (cos/COSArray.java:43-57)."""
-    if r.pos >= r.length or r.data[r.pos] != 0x5B:
-        raise EParseError(f"array expected at {r.pos}")
-    v = parse_object(r, resolver)
-    if not isinstance(v, list):  # unreachable by grammar
-        raise EParseError(f"array expected at {r.pos}")
-    return v
-
-
 def parse_object(r: Raw, resolver: Optional[Resolver] = None) -> COSValue:
-    """T1/T6/T7/T9 — one COS value via the master-regex token scanner.
+    """T1/T3/T6/T7/T9 — one COS value via the master-regex token scanner.
 
     Each token costs a single C-level regex match plus an int-indexed
     branch; containers are built on an explicit stack (no recursive

@@ -27,8 +27,6 @@ from .filters import decode_stream
 from .textops import Span, interpret_content
 from .xref import Parser
 
-SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
-
 T = TypeVar("T")
 
 

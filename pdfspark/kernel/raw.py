@@ -22,7 +22,6 @@ _WS_RE = re.compile(rb"[\x00\t\n\x0c\r ]+")
 # reference's skipWS uses {SP,TAB,LF,CR,NUL} — PDFRawData.java:54-63 —
 # we add FF per spec, a documented divergence in an untested path).
 WHITESPACE = b"\x00\t\n\x0c\r "
-DELIMITERS = b"()<>[]{}/%"
 
 
 def is_ws(b: int) -> bool:
@@ -154,10 +153,6 @@ class Raw:
         lo = max(0, from_pos - limit)
         idx = self.data.rfind(token, lo, from_pos)
         return idx
-
-    # --- B8: forward header scan (PDFParser.java:71-81) --------------
-    def find_forward(self, token: bytes, limit: int) -> int:
-        return self.data.find(token, 0, limit + len(token))
 
     # --- B9: readStream (PDFRawData.java:245-273) --------------------
     def read_stream_body(self, length: int) -> bytes:

@@ -26,7 +26,6 @@ N_BANDS = 16  # bands of r = 4 rows → s-curve threshold ≈ (1/16)^(1/4) = 0.5
 BUCKET_CAP = 32  # LSH buckets larger than this are skipped (degenerate
 # keys — empty/boilerplate docs — would otherwise go quadratic in ONE
 # task; cap² bounds the worst per-bucket pair count)
-JACCARD_MIN = 0.5
 SIM_BITS = 16
 
 # universal-hash MinHash: ONE md5 per shingle → 60-bit int h0, then

@@ -33,14 +33,20 @@ import time
 from typing import Optional
 
 import pyspark.sql.functions as F
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 
 def have_iceberg(spark: SparkSession) -> bool:
+    """``USE_ICEBERG=1`` and the Iceberg catalog class resolves on the
+    driver's classpath. py4j answers a missing class with a
+    ``JavaPackage`` instead of an error, so only a ``JavaClass`` counts."""
+    if os.environ.get("USE_ICEBERG", "0") != "1":
+        return False
     try:
-        spark._jvm.org.apache.iceberg.spark.SparkCatalog  # noqa: B018
-        return os.environ.get("USE_ICEBERG", "0") == "1"
-    except Exception:
+        return isinstance(spark._jvm.org.apache.iceberg.spark.SparkCatalog, JavaClass)
+    except Py4JError:
         return False
 
 

@@ -423,3 +423,52 @@ def test_page_labels_indirect_st_resolved():
     from pdfspark.kernel.extract import parse_document
 
     assert parse_document(bytes(out)).page_labels() == ["9"]
+
+
+_PIN_WORDS = (
+    "spark window merge table column vector stream value data small join "
+    "filter big group hash customer sort order slow line part fast row the "
+    "agg key query a scan batch"
+).split()
+# 20 fixed texts of 4..213 words
+_PIN_TEXTS = [
+    " ".join(_PIN_WORDS[(d * 7 + k * 3) % len(_PIN_WORDS)] for k in range(4 + 11 * d))
+    for d in range(20)
+]
+# sha256 prefix over the 20 payloads of each generator variant.
+# `pubsec` is left out: its CMS envelope (codec._build_encryption) is
+# random by design, so its bytes differ from one process to the next.
+_PAYLOAD_PINS = {
+    "mixed": "fbf9747fafa4e18b",
+    "classic": "adcd0838bcf109c6",
+    "objstream": "9d77b2963331b650",
+    "incremental": "7e51b020cf9a9d34",
+    "hybrid": "667c5029b8bc9d5f",
+    "filters_rotate": "5f4cc297250f8d07",
+    "crlf": "3918eb6bf5c4d485",
+    "encrypted": "656c29dcfcbdabfe",
+    "forms": "f5c32fb2286bc8a1",
+    "tagged": "731b143dc51d6254",
+    "nospace": "4128b53159321a64",
+    "cjk:hanzi": "e51d95ca1045429b",
+    "cjk:embedded": "72473a4a1b12840d",
+    "cjk:japan1": "718858c1446173c4",
+    "cjk:gb1": "7db805fcc8c0b3c9",
+    "type3": "5296d13ff4b59787",
+}
+
+
+@pytest.mark.parametrize("variant", sorted(_PAYLOAD_PINS))
+def test_generator_payload_bytes_pinned(variant):
+    """The generator's output bytes per variant: a codec speedup must
+    not change a payload byte unless the change says so."""
+    import hashlib
+
+    from pdfspark.codec import build_pdf, variant_for
+
+    h = hashlib.sha256()
+    for d, t in enumerate(_PIN_TEXTS):
+        h.update(build_pdf(str(d), synth_spans_py(str(d), t), variant_for(d, variant)))
+    assert h.hexdigest()[:16] == _PAYLOAD_PINS[variant], (
+        f"{variant} payload bytes changed; a repin must be declared in CHANGES.md"
+    )

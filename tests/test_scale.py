@@ -177,6 +177,16 @@ def test_iceberg_dispatch_mocked(spark, monkeypatch):
     ]
 
 
+def test_iceberg_gate_needs_the_catalog_class(spark, monkeypatch):
+    """USE_ICEBERG=1 without the Iceberg jars must keep the parquet
+    sinks: py4j resolves a missing class to a JavaPackage, not an
+    error, so the gate has to check that the class resolved."""
+    import pdfspark.scale as scale
+
+    monkeypatch.setenv("USE_ICEBERG", "1")
+    assert scale.have_iceberg(spark) is False
+
+
 def test_lineage_attempt_counter(spark, tmp_path):
     from pdfspark.scale import bucket_attempts
 
